@@ -129,8 +129,14 @@ def _latency_run(spark, duration_s: float, rate: int) -> dict:
 
     with tempfile.TemporaryDirectory() as ckpt:
         t0 = time.time()
+        events = rate_events_stream(spark, events_per_second=rate)
+        # latency-path sizing, set AFTER the source's tune_session
+        # sized shuffle partitions to the cores: each state store pays
+        # a per-batch open/commit, and 5 users need only one. Pinned
+        # per-checkpoint at first start, so it scopes to this run.
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
         q = start_pipeline(
-            rate_events_stream(spark, events_per_second=rate),
+            events,
             checkpoint_dir=ckpt,
             sink=probe_sink,
             # rate-source users cycle 1..5 instantly; a 60 s window
@@ -210,12 +216,6 @@ def latency_mode(duration_s: float = 20.0, rate: int = 20, runs: int = 3) -> Non
     if any probe captures zero steady events or never commits."""
     spark = get_spark("bench-latency")
     spark.sparkContext.setLogLevel("ERROR")
-    # latency-path sizing: state-store instance count == shuffle
-    # partitions, and each instance pays per-batch open/commit. 32 is
-    # the right THROUGHPUT shape; for a 20 ev/s latency probe it's 31
-    # idle state-store commits per trigger. Pinned per-checkpoint at
-    # first start, so this scopes to this run only.
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
     # the r9 creep's root cause (0.97 -> 1.147 s over three rounds):
     # NO-DATA micro-batches. At a steady 20 ev/s every batch has data,
     # so the empty batches the engine interleaves to advance the
@@ -255,9 +255,6 @@ def latency_mode(duration_s: float = 20.0, rate: int = 20, runs: int = 3) -> Non
     )
     wq.awaitTermination()
     cold_start_s = round(time.time() - t_cold, 2)
-    # file_events_stream re-tunes shuffle partitions (8); restore the
-    # probe's 1-partition state-store sizing for the measured runs
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
 
     results: list[dict] = []
     for i in range(runs):
@@ -391,6 +388,18 @@ def plan_fingerprint(df) -> str:
     # higher-order-function lambda variables are numbered by a
     # session-global counter (lambda x_1 in one build, x_7 the next)
     s = re.sub(r"lambda ([A-Za-z]+)_\d+#x", r"lambda \1_n#x", s)
+    # partition counts follow the host's core count (tune_session sizes
+    # shuffle partitions to defaultParallelism, and spark.range splits
+    # default to it), so they are canonicalized: a record written at 32
+    # cores must match a fresh pass at 4. Nested parens in the keys
+    # are allowed two levels deep.
+    s = re.sub(
+        r"(partitioning\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*?), \d+\)",
+        r"\1, n)",
+        s,
+    )
+    s = re.sub(r"RoundRobinPartitioning\(\d+\)", "RoundRobinPartitioning(n)", s)
+    s = re.sub(r"splits=\d+", "splits=n", s)
     # the Exchange keys inherit the same hash-order (parens, so the
     # bracket pass doesn't reach them)
     s = re.sub(
@@ -800,8 +809,11 @@ def main() -> None:
                 live = set(entrymod.queries())
                 sec_q = {k: v for k, v in sec_q.items() if k in live}
                 sec_f = {k: v for k, v in sec_f.items() if k in live}
+            # timings depend on the core count; fingerprints do not
+            # (plan_fingerprint canonicalizes partition counts)
             record[str(sf)] = {
                 "queries": sec_q, "fingerprints": sec_f, "reps": reps,
+                "cores": spark.sparkContext.defaultParallelism,
             }
             PREV_PATH.write_text(json.dumps(record, separators=(",", ":")))
             record_written = True

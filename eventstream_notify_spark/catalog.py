@@ -61,25 +61,32 @@ def tune_session(spark: SparkSession) -> None:
     it, so anything correctness- or performance-critical must be
     runtime-settable and set here).
 
+    This is the ONLY place the package sets the shuffle-partition
+    count, so a plan never depends on which builder or source ran
+    last.
+
     - nanosAsLong/UTC: correctness (see ``table``).
-    - shuffle partitions 32: a vanilla session defaults to 200 — at
-      local[32]/sf0.1 that's 6x task-scheduling overhead per shuffle,
-      and for STREAMING queries it means 200 RocksDB state-store
-      instances per trigger (state partition count is pinned to
-      shuffle partitions; AQE never coalesces streaming state).
+    - shuffle partitions = ``defaultParallelism``, the cores the
+      session actually has. A vanilla session defaults to 200: 6x
+      task-scheduling overhead per shuffle at local[32], and for
+      STREAMING queries 200 RocksDB state-store instances per trigger
+      (the state partition count is pinned to shuffle partitions at
+      stream start; AQE never coalesces streaming state). Each store
+      pays an open/commit per micro-batch, so stores beyond the cores
+      only add fixed cost, and fewer cap a stateful stage's
+      parallelism below the cores. Measured on the live notify path
+      at 4 cores: 32 stores -> 4 cut notify p50 from 18.2 s to 5.1 s;
+      8 stores gave 6.1-7.1 s, and 1-2 stores were within noise of 4.
     - AQE + coalesce/skew: runtime re-planning for batch queries.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # date/time rendering must be tz-stable regardless of who built the
     # session (the DuckDB oracle compares against naive timestamps)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:
-        # non-numeric (e.g. "*", "local[8]") -> the local[32] default;
-        # an invalid conf string would otherwise fail at query time
-        cpus = 32
-    spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(spark.sparkContext.defaultParallelism),
+    )
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -90,7 +97,7 @@ def tune_session(spark: SparkSession) -> None:
     # asynchronously). Checkpoint REPRESENTATION only, computed rows
     # unchanged; ignored by non-RocksDB providers. Runtime-settable and
     # read at stream start, so it reaches streams in the driver's
-    # vanilla session too (both file stream sources call tune_session).
+    # vanilla session too (every stream source calls tune_session).
     # Measured at sf0.1: state commit ~1.5 s -> ~0.2 s per instance
     # (zx_stream_agg_chain 4.67 -> 2.7 s, zx_stream_ewma 4.88 -> 4.0 s).
     spark.conf.set(

@@ -1,15 +1,16 @@
-"""SparkSession factory with scale-aware defaults.
+"""SparkSession factory.
 
 Mirrors the role of the reference's ``config.yaml`` loader
 (reference: auto_kafka_redis.py:43-67) — one place that turns
 configuration into a ready-to-use engine handle.
 
-Defaults are tuned for the test harness (local[N], 10^4..10^6 rows)
-but every setting is chosen to also be the right *shape* at cluster
-scale: AQE on (runtime re-planning, skew-join splitting, partition
-coalescing), shuffle partitions sized via env, UTC session timezone
-(determinism vs naive-timestamp oracles), Arrow for any pandas
-exchange.
+The builder carries only what must be fixed before the session
+exists (master, driver memory, UI, the state-store provider) plus the
+broadcast threshold. Every runtime conf — shuffle partitions sized to
+the session's cores, AQE, UTC session timezone, Arrow, RocksDB
+changelog checkpointing — comes from ``catalog.tune_session``, the
+same function that tunes a vanilla session built by the caller of
+``__spark_entry__``, so both kinds of session plan alike.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = "32"
+from eventstream_notify_spark.catalog import tune_session
 
 
 def get_spark(app_name: str = "eventstream-notify-spark") -> SparkSession:
@@ -31,40 +32,13 @@ def get_spark(app_name: str = "eventstream-notify-spark") -> SparkSession:
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        # --- determinism / oracle compatibility -------------------
-        .config("spark.sql.session.timeZone", "UTC")
-        # --- scale posture ----------------------------------------
-        .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # spill-aware input sizing: ~128 MB per scan task keeps any
-        # partition comfortably in executor memory at cluster scale
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # --- python exchange is always Arrow ----------------------
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # --- streaming state at scale: RocksDB, not heap ----------
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         )
-        # r13 opt: commit a per-batch CHANGELOG instead of snapshotting
-        # SST files every commit — the recommended high-commit-rate
-        # RocksDB posture at scale (snapshots still happen, just
-        # asynchronously/periodically). Checkpoint representation only;
-        # computed rows are unchanged. Measured on the bounded-replay
-        # suite: state commit drops from ~1.5 s to ~0.2 s per instance
-        # (e.g. zx_stream_agg_chain 4.67 -> 2.7 s, zx_stream_ewma
-        # 4.88 -> 4.0 s at sf0.1).
-        .config(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
-        .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         # 12g default: local[32] means driver heap = the WHOLE JVM
         # (all 32 executor threads' operators + state stores + any
         # sink residue). 8g left ~0 headroom in a 276-query session —
@@ -76,4 +50,6 @@ def get_spark(app_name: str = "eventstream-notify-spark") -> SparkSession:
         )
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    tune_session(spark)
+    return spark

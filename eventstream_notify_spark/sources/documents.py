@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from eventstream_notify_spark.catalog import tune_session
+
 
 def file_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded replay of documents.parquet as a streaming frame.
@@ -20,15 +22,9 @@ def file_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Documents carry no event time; arrival order is the file's row
     order (doc_id ascending in the testdata), which is the ordered-
     replay contract the streaming dedup kernels document."""
-    from eventstream_notify_spark.catalog import tune_session
-
+    # state-store partition count == shuffle partitions at stream
+    # start, sized to the cores (same rationale as file_events_stream)
     tune_session(spark)
-    # state-store partition count == shuffle partitions at stream start
-    # (same rationale as file_events_stream)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
-    )
     probe = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     schema = ", ".join(f"{n} {t}" for n, t in probe.dtypes)
     return (

@@ -22,7 +22,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from eventstream_notify_spark.catalog import EVENT_SCHEMA, WIRE_EVENT_SCHEMA
+from eventstream_notify_spark.catalog import (
+    EVENT_SCHEMA,
+    WIRE_EVENT_SCHEMA,
+    normalize_events_ts,
+    tune_session,
+)
 
 
 def parse_wire_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
@@ -90,6 +95,7 @@ def kafka_events_stream(
     """Kafka ingest (A1 streaming). Not exercised in CI (no broker in
     the container) — the code path mirrors file_events_stream exactly
     after the source exchange."""
+    tune_session(spark)
     raw = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
@@ -176,6 +182,7 @@ def wire_file_stream(spark: SparkSession, path: str) -> DataFrame:
     for the topic, and the SAME ``parse_wire_events`` decodes it — so
     the produce → ingest → pipeline loop is exercised end to end with
     only the broker itself swapped out."""
+    tune_session(spark)
     raw = spark.readStream.schema("key string, value string").parquet(path)
     return _canonical_wire(parse_wire_events(raw))
 
@@ -201,23 +208,11 @@ def file_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch path uses — the streaming schema is derived from the actual
     parquet footer (a driver-side metadata read, no data scan), so a
     physical-layout change in the testdata can't silently mis-scale
-    event time. tune_session matters doubly here: on a vanilla
-    session, shuffle partitions (200) pin the streaming STATE
-    partition count — 200 RocksDB instances/trigger."""
-    from eventstream_notify_spark.catalog import normalize_events_ts, tune_session
-
+    event time. Like every source here it calls tune_session: the
+    shuffle-partition count at stream start pins the streaming STATE
+    partition count, and a vanilla session's 200 would mean 200
+    RocksDB instances per trigger instead of one per core."""
     tune_session(spark)
-    # Streaming state partition count == shuffle partitions at stream
-    # START (pinned per checkpoint; AQE never applies to streaming).
-    # The engine's bounded-replay streams carry ~10^2 keys / 10^5 rows
-    # per trigger: 8 state stores beat 32 by ~30% wall-clock (fewer
-    # store open/commit cycles and Python worker round-trips). Batch
-    # queries are untouched — every builder re-runs tune_session,
-    # which restores the batch setting.
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
-    )
     # Footer-only schema probe: streaming reads REQUIRE a declared
     # schema, and declaring the wrong physical type for ts coerces
     # instead of erroring (nanos declared as micros = every window
@@ -242,6 +237,7 @@ def rate_events_stream(
     """B6 streaming — the reference producer as a rate-source mapping:
     monotone id wrapping at 10^6, 5 synthetic users, event-time stamp
     (auto_kafka_redis.py:191-219)."""
+    tune_session(spark)
     return (
         spark.readStream.format("rate")
         .option("rowsPerSecond", events_per_second)

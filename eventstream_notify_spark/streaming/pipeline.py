@@ -1379,16 +1379,26 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # past any bounded replay's batch count before the query starts
     # (production: a StreamingQueryListener accumulating onQueryProgress
     # has no cap at all — the conf keeps this bounded harness simple).
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
-    q = (
-        obs.writeStream.format("noop")
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_observe_")
+    # The caller's value is restored afterwards, so the operator
+    # leaves no session-global state behind.
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "100000")
+    try:
+        q = (
+            obs.writeStream.format("noop")
+            .trigger(availableNow=True)
+            .option(
+                "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_observe_")
+            )
+            .start()
         )
-        .start()
-    )
-    q.awaitTermination()
+        q.awaitTermination()
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
     totals = {"n_rows": 0, "sum_mv": 0, "n_errors": 0}
     for p in q.recentProgress:
         om = json.loads(p.json).get("observedMetrics", {}).get(

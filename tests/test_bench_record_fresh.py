@@ -19,6 +19,9 @@ The comparison runs at sf0.001 — a second, cheap record section
 written by the same round-exit bench pass — because fingerprints are
 statistics-sensitive (a broadcast threshold can flip between SFs), so
 each SF section is only comparable to a fresh pass at ITS OWN SF.
+Core counts differ between the host that wrote the record and the one
+checking it; ``plan_fingerprint`` canonicalizes partition counts, so
+that difference alone never fails the gate.
 """
 
 from __future__ import annotations
@@ -48,16 +51,11 @@ def _is_streaming(name: str) -> bool:
     )
 
 
-def test_committed_record_fingerprints_match_head(spark):
+def _stale_fingerprints(spark, committed: dict, reg: dict):
+    """The gate's comparison: (missing, stale) for every non-streaming
+    query in ``reg`` against the ``committed`` fingerprint map."""
     from bench import plan_fingerprint
 
-    record = json.loads(RECORD.read_text())
-    assert "0.001" in record, (
-        "bench_prev.json carries no sf0.001 section — the round-exit "
-        "bench pass (bench.py at SPARK_GRAFT_SF_DIR=sf0.001) writes it"
-    )
-    committed = record["0.001"].get("fingerprints", {})
-    reg = queries()
     stale: list[str] = []
     missing: list[str] = []
     for name in sorted(reg):
@@ -69,6 +67,17 @@ def test_committed_record_fingerprints_match_head(spark):
         fresh = plan_fingerprint(reg[name](spark, SF))
         if fresh != committed[name]:
             stale.append(f"{name}: committed {committed[name]} != head {fresh}")
+    return missing, stale
+
+
+def test_committed_record_fingerprints_match_head(spark):
+    record = json.loads(RECORD.read_text())
+    assert "0.001" in record, (
+        "bench_prev.json carries no sf0.001 section — the round-exit "
+        "bench pass (bench.py at SPARK_GRAFT_SF_DIR=sf0.001) writes it"
+    )
+    committed = record["0.001"].get("fingerprints", {})
+    missing, stale = _stale_fingerprints(spark, committed, queries())
     assert not missing, (
         "queries registered at HEAD but absent from the committed "
         f"record (regenerate bench_prev.json at the final commit): "
@@ -79,3 +88,33 @@ def test_committed_record_fingerprints_match_head(spark):
         "HEAD — regenerate the record at the round's final commit "
         "(r9 verdict #2):\n" + "\n".join(stale[:15])
     )
+
+
+def _grouped(spark, parts: int, extra_filter: bool = False):
+    """A shuffle plan whose Exchange and Range carry ``parts``."""
+    from pyspark.sql import functions as F
+
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    df = spark.range(0, 1000, 1, parts)
+    if extra_filter:
+        df = df.filter(F.col("id") > 10)
+    return df.groupBy((F.col("id") % 7).alias("k")).count()
+
+
+def test_gate_is_host_independent_but_catches_plan_changes(spark):
+    """The record is written on one host and checked on another: a
+    different core count (partition count in every Exchange and Range)
+    must not fail the gate, while a structural plan change still
+    must."""
+    from bench import plan_fingerprint
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        committed = {"q_agg": plan_fingerprint(_grouped(spark, 32))}
+        same = {"q_agg": lambda s, _sf: _grouped(s, 3)}
+        changed = {"q_agg": lambda s, _sf: _grouped(s, 32, extra_filter=True)}
+        assert _stale_fingerprints(spark, committed, same) == ([], [])
+        missing, stale = _stale_fingerprints(spark, committed, changed)
+        assert not missing and len(stale) == 1 and stale[0].startswith("q_agg")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

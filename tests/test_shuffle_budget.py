@@ -272,7 +272,9 @@ def _factory_plan_state(spark):
     for k, v in {
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.sql.adaptive.enabled": "true",
-        "spark.sql.shuffle.partitions": "32",
+        "spark.sql.shuffle.partitions": str(
+            spark.sparkContext.defaultParallelism
+        ),
     }.items():
         spark.conf.set(k, v)
     # leaked runtime-filter thresholds inject bloom builds (an extra

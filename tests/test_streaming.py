@@ -122,6 +122,53 @@ def test_pipeline_checkpoint_recovery_no_reprocessing(spark, tmp_path):
     assert first_epochs < new_epochs
 
 
+def test_stream_state_stores_follow_core_count(spark, tmp_path):
+    """A stream sizes its state to the session's cores whatever a
+    stray caller set before the source was built: one store per core
+    in both state operators (dedup and rate limit), not 32."""
+    from eventstream_notify_spark.sources.events import to_wire, wire_file_stream
+
+    topic = str(tmp_path / "topic")
+    rows = [ev(i, i, i % 3) for i in range(6)]
+    to_wire(spark.createDataFrame(rows, SCHEMA)).write.parquet(topic)
+    got: list[int] = []
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        q = start_pipeline(
+            wire_file_stream(spark, topic),
+            str(tmp_path / "ckpt"),
+            lambda df, _eid: got.extend(r.event_id for r in df.collect()),
+            available_now=True,
+        )
+        q.awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert sorted(got) == list(range(6))
+    ops = q.lastProgress["stateOperators"]
+    assert len(ops) == 2
+    cores = spark.sparkContext.defaultParallelism
+    assert [op["numStateStoreInstances"] for op in ops] == [cores, cores]
+
+
+def test_stream_sources_leave_batch_plans_unchanged(spark, sf_dir):
+    """Building a stream source must not change how a batch query
+    plans afterwards: no source leaves its own partition count in the
+    session."""
+    from bench import plan_fingerprint
+    from eventstream_notify_spark.registry import queries
+    from eventstream_notify_spark.sources.documents import file_documents_stream
+    from eventstream_notify_spark.sources.events import file_events_stream
+
+    agg_hash = queries()["agg_hash"]
+    before = plan_fingerprint(agg_hash(spark, sf_dir))
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    file_events_stream(spark, sf_dir)
+    file_documents_stream(spark, sf_dir)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert plan_fingerprint(agg_hash(spark, sf_dir)) == before
+
+
 def test_keyed_store_epoch_overwrite_idempotent(spark, tmp_path):
     """A replayed micro-batch (same epoch id) overwrites itself —
     the exactly-once guarantee of the sink."""
